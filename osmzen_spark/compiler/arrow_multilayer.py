@@ -1,11 +1,14 @@
-"""ALL-layers-in-one-pass Arrow evaluation.
+"""ALL-layers-in-one-pass Arrow evaluation: the rule evaluator of
+NormalizeEngine.process (a one-layer call is the same pass with one
+name). The Catalyst Column path (CompiledLayer.evaluate) is kept only
+as its test oracle.
 
-The per-layer Arrow path (arrow_layer.py) runs one Spark job per layer:
-nine scans of the derived table, nine Arrow IPC round trips, nine tag
-matrices built from the same tags column — and a ~3 s per-job floor
-(scheduling + exchange latency) that dwarfs the actual rule compute
-(measured: water 25 rules = 3.6 s, pois 279 rules = 7.0 s at local[32],
-1.65M rows — the floor, not the rules, dominates).
+Evaluating each layer as its own Spark job would mean nine scans of the
+derived table, nine Arrow IPC round trips, nine tag matrices built from
+the same tags column — and a ~3 s per-job floor (scheduling + exchange
+latency) that dwarfs the actual rule compute (measured: water 25 rules
+= 3.6 s, pois 279 rules = 7.0 s at local[32], 1.65M rows — the floor,
+not the rules, dominates).
 
 This module evaluates EVERY layer inside one mapInArrow pass:
 
@@ -43,12 +46,11 @@ from pyspark.sql import types as T
 
 from osmzen_spark.compiler.arrow_layer import (
     ArrowLayerPlan,
+    _ARROW_TYPES,
     _SPARK_TYPES,
     _coerce_to_arrow,
 )
 from osmzen_spark.compiler.vectorized import BatchContext
-
-_PA_TYPES = {"string": pa.string(), "double": pa.float64(), "boolean": pa.bool_()}
 
 META = ("id", "type", "zen_layer", "min_zoom", "match_idx")
 
@@ -294,7 +296,7 @@ def evaluate_all_layers_arrow(
                             key = k
                             break
                     if key is None:
-                        arrays.append(pa.nulls(len(kept), type=_PA_TYPES[typ]))
+                        arrays.append(pa.nulls(len(kept), type=_ARROW_TYPES[typ]))
                         names.append(fname)
                         continue
                     rule_map = plan.emit_plan[key]
@@ -327,7 +329,9 @@ def _bq(name: str) -> str:
 
 def split_layer_views(union: DataFrame, layers: dict, df_input_cols: list[str]) -> dict:
     """Per-layer frames over the (checkpointed) union — filter +
-    projection, shaped identically to evaluate_layer_arrow output.
+    projection, shaped like CompiledLayer.evaluate output: id/type/
+    zen_layer/min_zoom/match_idx, the layer's emits (variant union
+    fields aliased back to the key), then the input columns.
 
     Built as ONE selectExpr of SQL strings per layer: the old
     per-column F.col/alias/when chain cost ~150 py4j round-trips per
@@ -358,8 +362,8 @@ def split_layer_views(union: DataFrame, layers: dict, df_input_cols: list[str]) 
             else:
                 # typed, not void: NullType columns cannot reach a
                 # parquet writer (normalize._stage_cut casts voids, but
-                # the default multilayer branch stage-cuts BEFORE these
-                # views are built), and the type must match what the
+                # process stage-cuts the union BEFORE these views are
+                # built), and the type must match what the
                 # membership join would have produced so downstream
                 # coalesce()/array ops still resolve
                 exprs.append(

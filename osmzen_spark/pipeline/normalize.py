@@ -3,8 +3,10 @@
 Lifecycle mirrors ref:process.go Process() (SURVEY.md §3) with Spark
 stage boundaries:
 
-  1. derive geometry columns once (Arrow-vectorized mapInArrow)
-  2. per-layer first-match rule eval (codegen'd when-chains)
+  1. derive geometry columns (area/length/clon/clat) and run every
+     layer's first-match rule eval in ONE Arrow-vectorized mapInArrow
+     pass (compiler.arrow_multilayer) producing the layer-tagged union
+  2. split the (optionally stage-cut) union into per-layer views
   3. per-feature transforms (narrow withColumn stages)
   4. SetConditionalNames (broadcast id-joins) + configured
      post-processors in config order
@@ -202,34 +204,6 @@ class NormalizeEngine:
             & (F.col(lat_col) <= maxy)
         )
 
-    def eval_layers(
-        self,
-        derived: DataFrame,
-        zoom: int,
-        layer_names: list[str] | None = None,
-        bound=None,
-    ) -> dict[str, DataFrame]:
-        """Stages 2+3: rule eval + transforms per layer.
-
-        The derived input is evaluated once per layer; an element can
-        match in multiple layers (ref:README.md:229). With a bound,
-        Point features outside it are skipped before eval AND Point
-        outputs (e.g. representative points of big polygons) outside it
-        are dropped after (ref:process.go:146-167)."""
-        if bound is not None:
-            derived = derived.filter(
-                (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-            )
-        out: dict[str, DataFrame] = {}
-        for name in layer_names or list(self.config.layers):
-            layer = self.config.layers[name]
-            df = layer.evaluate(derived, zoom)
-            df = apply_transforms(df, layer.transforms, zoom)
-            if bound is not None:
-                df = df.filter((F.col("geom_type") != "Point") | self._point_in_bound(bound))
-            out[name] = df
-        return out
-
     def postprocess(
         self, layers: dict[str, DataFrame], zoom: int, bound=None
     ) -> dict[str, DataFrame]:
@@ -255,7 +229,6 @@ class NormalizeEngine:
         tile_zoom: int | None = None,
         layer_names: list[str] | None = None,
         cache: bool = False,
-        single_pass: bool = False,
         bound: tuple[float, float, float, float] | None = None,
         relation_members: DataFrame | None = None,
         way_nodes: DataFrame | None = None,
@@ -264,149 +237,78 @@ class NormalizeEngine:
         """Full pipeline; returns {layer_name: DataFrame} with tile
         columns (tile_z/tile_x/tile_y/cell) appended.
 
+        Every selected layer is evaluated in ONE mapInArrow pass
+        (compiler.arrow_multilayer: shared tag matrix, one Arrow
+        exchange, one job) that produces the layer-tagged union; a
+        one-layer call is the same pass with one name. With
+        ``cache=True`` that union is the single stage cut, and the
+        per-layer frames are filter + projection views over it.
+
         (Stage-checkpoint mode note: full-config runs default to
         ``parquet`` checkpoints — see ``_stage_cut``; measured 2.7x
         faster end-to-end than ``local`` for the 9-layer pipeline at
         sf0.1 because the heap-held wide union rows put the single
         local-mode JVM into GC collapse during the 13-scan
         post-process phase.)
-
-        Two physical strategies (both produce identical results —
-        the fixture suite runs on both):
-
-        * single_pass=False (default): one branch per layer; each
-          branch re-derives from source. Measured fastest in the
-          compute-light local regime (sf0.1: ~27s vs ~60s), because
-          re-computing the synthetic scan is cheaper than
-          materializing wide cached rows, and Catalyst prunes each
-          branch to exactly the columns it needs.
-
-        * single_pass=True: ALL layers' rules + transforms in one scan
-          + one projection (pipeline.singlepass), the exploded union
-          persisted (cache=True) as the only fan-out point. One source
-          scan instead of layers+2, which matters when the SCAN is the
-          cost (cold object-store reads). Measured locally it is much
-          slower than the branch shape (it matches rules through the
-          Catalyst Column chains, not the Arrow evaluator, and
-          evaluates every layer's hoisted emit expressions for every
-          row before the explode filter), so it is A/B-retained but
-          NOT the deployable default — the branch + eager
-          stage-checkpoint shape is.
         """
-        from osmzen_spark.pipeline.singlepass import eval_all_layers_single_pass, split_layers
+        from osmzen_spark.compiler.arrow_multilayer import (
+            evaluate_all_layers_arrow,
+            split_layer_views,
+        )
 
         names = layer_names or list(self.config.layers)
         tz = tile_zoom if tile_zoom is not None else min(zoom, 16)
-        if single_pass:
-            derived = self.derive(elements, relation_members, way_nodes)
-            if bound is not None:
-                derived = derived.filter(
-                    (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                )
-            union = eval_all_layers_single_pass(derived, self.config, zoom, names)
-            if bound is not None:
-                union = union.filter(
-                    (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                )
-            if cache:
-                union = union.persist()
-            layers = split_layers(union, names)
+        # Fused-derive shape: geometry stats are computed INSIDE the
+        # eval mapInArrow pass (derive_geometry=True) so the wide
+        # elements table crosses the Python boundary ONCE, not twice.
+        # The membership joins only key on element_type/element_id, so
+        # they run on the raw elements unchanged. A bound filter needs
+        # clon/clat before eval, so bounded runs keep the separate
+        # derive pass.
+        fuse = bound is None
+        ckpt_mode = "parquet" if len(names) >= 5 else "local"
+        membership = relation_members is not None or way_nodes is not None
+        if fuse:
+            derived = elements
+            if membership:
+                from osmzen_spark.pipeline.membership import with_membership_columns
+
+                derived = with_membership_columns(elements, relation_members, way_nodes)
         else:
-            import os as _os
-
-            multilayer = _os.environ.get("OSMZEN_MULTILAYER", "1") != "0"
-            # Fused-derive shape (the multilayer default): geometry
-            # stats are computed INSIDE the eval mapInArrow pass
-            # (arrow_multilayer derive_geometry=True) so the wide
-            # elements table crosses the Python boundary ONCE, not
-            # twice. The membership joins only key on element_type/
-            # element_id, so they run on the raw elements unchanged.
-            # A bound filter needs clon/clat before eval, so bounded
-            # runs keep the separate derive pass.
-            fuse = multilayer and bound is None
-            ckpt_mode = "parquet" if len(names) >= 5 else "local"
-            if fuse:
-                derived = elements
-                if relation_members is not None or way_nodes is not None:
-                    from osmzen_spark.pipeline.membership import with_membership_columns
-
-                    derived = with_membership_columns(
-                        elements, relation_members, way_nodes
-                    )
-            else:
-                derived = self.derive(elements, relation_members, way_nodes)
-            if (relation_members is not None or way_nodes is not None) and not (
-                cache and multilayer
-            ):
-                # cut the plan at the membership join: without this the
-                # join+aggregation subtree is duplicated into every layer
-                # branch (and every postprocess self-join on top), and
-                # Catalyst analysis cost multiplies accordingly. On a
-                # cluster this cut is the Iceberg stage checkpoint
-                # (lineage.py). When the eval UNION is itself cut
-                # (cache=True on the multilayer path), `derived` has
-                # exactly one consumer — the eval pass feeding that
-                # cut — so this intermediate checkpoint would be a pure
-                # extra write+read of the full elements table and is
-                # skipped.
-                derived = self._stage_cut(
-                    derived, "derived", eager=False, default_mode=ckpt_mode
-                )
-            if multilayer:
-                # DEFAULT physical shape: ALL layers evaluated in ONE
-                # mapInArrow pass (shared tag matrix, one Arrow
-                # exchange, one job) producing the layer-tagged union;
-                # one stage cut replaces nine (arrow_multilayer.py —
-                # the 9 separate jobs each paid a ~3s scheduling/
-                # exchange floor that dominated the rule compute).
-                from osmzen_spark.compiler.arrow_multilayer import (
-                    evaluate_all_layers_arrow,
-                    split_layer_views,
-                )
-
-                if bound is not None:
-                    derived = derived.filter(
-                        (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                    )
-                use = {n: self.config.layers[n] for n in names}
-                union = evaluate_all_layers_arrow(
-                    derived, use, zoom, names, derive_geometry=fuse
-                )
-                if cache:
-                    union = self._stage_cut(
-                        union,
-                        "eval_union",
-                        eager=True,
-                        default_mode=ckpt_mode,
-                        partition_by="zen_layer",
-                    )
-                input_cols = derived.columns + (
-                    ["area", "length", "clon", "clat"] if fuse else []
-                )
-                views = split_layer_views(union, use, input_cols)
-                layers = {}
-                for n in names:
-                    from osmzen_spark.pipeline.transforms import apply_transforms
-
-                    df = apply_transforms(views[n], self.config.layers[n].transforms, zoom)
-                    if bound is not None:
-                        df = df.filter(
-                            (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-                        )
-                    layers[n] = df
-            else:
-                layers = self.eval_layers(derived, zoom, names, bound=bound)
-                if cache:
-                    # truncate each layer's plan before post-processing:
-                    # label-placement unions, dedup splits and backfill
-                    # joins each duplicate their input subtree, so
-                    # without a cut the optimizer re-walks (and the
-                    # driver re-holds) the full rule-evaluation tree
-                    # 4-8x per layer — enough to OOM an 8g driver at 7
-                    # layers. The cut replaces the subtree with a
-                    # materialized leaf (on a cluster: the Iceberg stage
-                    # checkpoint, lineage.py).
-                    layers = {n: self._stage_cut(df, n, eager=True) for n, df in layers.items()}
+            derived = self.derive(elements, relation_members, way_nodes)
+        if membership and not cache:
+            # cut the plan at the membership join: without this the
+            # join+aggregation subtree is duplicated into every layer
+            # view (and every postprocess self-join on top), and
+            # Catalyst analysis cost multiplies accordingly. On a
+            # cluster this cut is the Iceberg stage checkpoint
+            # (lineage.py). When the eval union is itself cut
+            # (cache=True), `derived` has exactly one consumer — the
+            # eval pass feeding that cut — so this intermediate
+            # checkpoint would be a pure extra write+read of the full
+            # elements table and is skipped.
+            derived = self._stage_cut(derived, "derived", eager=False, default_mode=ckpt_mode)
+        if bound is not None:
+            derived = derived.filter(
+                (F.col("geom_type") != "Point") | self._point_in_bound(bound)
+            )
+        use = {n: self.config.layers[n] for n in names}
+        union = evaluate_all_layers_arrow(derived, use, zoom, names, derive_geometry=fuse)
+        if cache:
+            union = self._stage_cut(
+                union, "eval_union", eager=True, default_mode=ckpt_mode, partition_by="zen_layer"
+            )
+        input_cols = derived.columns + (["area", "length", "clon", "clat"] if fuse else [])
+        views = split_layer_views(union, use, input_cols)
+        layers = {}
+        for n in names:
+            df = apply_transforms(views[n], self.config.layers[n].transforms, zoom)
+            if bound is not None:
+                # Point outputs (e.g. representative points of big
+                # polygons) outside the bound are dropped after eval
+                # (ref:process.go:146-167)
+                df = df.filter((F.col("geom_type") != "Point") | self._point_in_bound(bound))
+            layers[n] = df
         layers = self.postprocess(layers, zoom, bound=bound)
         if bound is not None and clip:
             # hard-wired final step for per-tile runs: clip geometry to

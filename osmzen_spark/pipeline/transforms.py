@@ -633,7 +633,7 @@ class _LazyProps(dict):
 
 
 def apply_transforms(df: DataFrame, names: list[str], zoom: int) -> DataFrame:
-    """Legacy DataFrame-at-a-time wrapper: builds a props dict from the
+    """DataFrame-at-a-time application: builds a props dict from the
     frame's columns, applies the chain, projects the result."""
     ctx = EvalContext(
         tags="tags",

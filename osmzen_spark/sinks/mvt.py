@@ -252,12 +252,13 @@ def _encode_commands_batch(gx, gy, offs, gcodes, rl_l):
         # per-feature slicing truncated silently; same here)
         rlen_eff = np.minimum(rlen, np.maximum(fend[rfeat] - rstart, 0))
         close_r = gcodes[sidx][rfeat] == 3
-        nonempty = rlen_eff > 0
-        sf = np.where(nonempty, rstart, 0)
-        sl = np.where(nonempty, rstart + rlen_eff - 1, 0)
-        closed = (
-            close_r & (rlen_eff > 1) & (gx[sf] == gx[sl]) & (gy[sf] == gy[sl])
-        )
+        # endpoint compare only on rings that own >1 point: a ring
+        # truncated to nothing has no index into gx (which is empty
+        # when the whole batch is point-free)
+        closed = close_r & (rlen_eff > 1)
+        ci = np.flatnonzero(closed)
+        sf, sl = rstart[ci], rstart[ci] + rlen_eff[ci] - 1
+        closed[ci] = (gx[sf] == gx[sl]) & (gy[sf] == gy[sl])
         tlen = rlen_eff - closed
         keep = tlen >= 2
         klen = tlen[keep]

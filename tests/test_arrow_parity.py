@@ -1,12 +1,22 @@
-"""A/B parity: the Arrow-batch vectorized evaluator
-(compiler/arrow_layer.py) must produce row-identical results to the
-Catalyst Column path (compiler/layer.py) over a probe corpus that
-exercises every condition/expression/function family."""
+"""Parity: the production rule evaluator (one
+compiler/arrow_multilayer.py pass + split_layer_views, as
+NormalizeEngine.process runs it) must produce row-identical results to
+the Catalyst Column path (CompiledLayer.evaluate, the test oracle).
 
+The corpus is a set of hand-picked probes that exercise every
+condition/expression/function family, plus the per-rule probes that
+tests/test_rule_coverage.py generates for every rule of the compared
+layers (their area/length supplied as columns, not derived)."""
+
+from osmzen_spark.compiler.arrow_multilayer import (
+    evaluate_all_layers_arrow,
+    split_layer_views,
+)
 from osmzen_spark.geom.derive import geometry_from_rings, point_geometry
 from osmzen_spark.pipeline.normalize import NormalizeEngine
 
 from conftest import PARKING_GARAGE_RING, PARKING_GARAGE_TAGS, make_elements
+from test_rule_coverage import generated_probes
 
 SQ = geometry_from_rings([[(0.0, 0.0), (0.01, 0.0), (0.01, 0.01), (0.0, 0.01)]], "Polygon")
 BIG = geometry_from_rings([[(0.0, 0.0), (0.3, 0.0), (0.3, 0.3), (0.0, 0.3)]], "Polygon")
@@ -34,7 +44,37 @@ PROBES = [
     (18, "node", {"place": "country", "name": "Land", "population": "8000000"}, "Point", PT),
     (19, "way", {"boundary": "administrative", "admin_level": "4"}, "Polygon", BIG),
     (20, "relation", {"route": "train", "service": "high_speed", "name": "X"}, "LineString", LINE),
+    (21, "way", {"highway": "cycleway", "bicycle": "designated", "name": "Bike Path"}, "LineString", LINE),
 ]
+
+# Layers whose Column-path plan is still cheap enough to build (pois and
+# landuse cost minutes of py4j per plan — the reason the Arrow evaluator
+# exists; their parity is covered by the fixture goldens + oracle
+# checks instead).
+COMPARED = ("water", "earth", "places", "roads", "buildings", "boundaries", "transit")
+
+
+def _generated_rows(spark, schema, first_id: int):
+    """The per-rule probes of every compared layer as derived rows."""
+    rows = []
+    for name in COMPARED:
+        for _rule, p in generated_probes(name)[0]:
+            gt = p["geom_type"]
+            geom = PT if "Point" in gt else LINE if "LineString" in gt else SQ
+            rows.append(
+                {
+                    "element_id": first_id + len(rows),
+                    "element_type": "node" if "Point" in gt else "way",
+                    "tags": p["tags"],
+                    "geom_type": gt,
+                    "geometry": geom,
+                    "area": float(p["area"]),
+                    "length": float(p["length"]),
+                    "clon": 0.0,
+                    "clat": 0.0,
+                }
+            )
+    return spark.createDataFrame(rows, schema=schema)
 
 
 def _rows(df):
@@ -52,17 +92,30 @@ def _rows(df):
 
 
 def test_arrow_column_parity(spark):
-    """Compare paths on every layer whose Column-path plan is still
-    cheap enough to build (pois/landuse cost minutes of py4j per plan —
-    the reason the Arrow path exists; their parity is covered by the
-    fixture goldens + oracle checks instead)."""
-    elements = make_elements(spark, PROBES)
+    """One production pass over the compared layers (plus pois, so the
+    union stores `bicycle` as typed variant columns: roads string, pois
+    boolean) split into per-layer views; each compared view equals the
+    Column-path oracle row for row."""
     engine = NormalizeEngine()
-    derived = engine.derive(elements)
-    for name in ("water", "earth", "places", "roads", "buildings", "boundaries", "transit"):
-        layer = engine.config.layers[name]
-        a = _rows(layer.evaluate(derived, 20, use_arrow=True))
-        c = _rows(layer.evaluate(derived, 20, use_arrow=False))
-        assert set(a) == set(c), f"{name}: row keys differ: {set(a) ^ set(c)}"
-        for k in a:
-            assert a[k] == c[k], f"{name} row {k}:\n arrow={a[k]}\n column={c[k]}"
+    hand = engine.derive(make_elements(spark, PROBES))
+    derived = hand.unionByName(_generated_rows(spark, hand.schema, len(PROBES) + 1))
+    use = {n: engine.config.layers[n] for n in COMPARED + ("pois",)}
+    union = evaluate_all_layers_arrow(derived, use, 20, list(use)).cache()
+    views = split_layer_views(union, use, derived.columns)
+    try:
+        assert {"__emit_bicycle@string", "__emit_bicycle@boolean"} <= set(union.columns)
+        assert dict(views["roads"].dtypes)["bicycle"] == "string"
+        assert dict(views["pois"].dtypes)["bicycle"] == "boolean"
+        matched = set()
+        for name in COMPARED:
+            a = _rows(views[name])
+            c = _rows(engine.config.layers[name].evaluate(derived, 20))
+            assert set(a) == set(c), f"{name}: row keys differ: {set(a) ^ set(c)}"
+            for k in a:
+                assert a[k] == c[k], f"{name} row {k}:\n arrow={a[k]}\n column={c[k]}"
+            matched |= {(name, k[2]) for k in a}
+        # every rule of every compared layer won at least one row
+        every = {(n, i) for n in COMPARED for i in range(len(engine.config.layers[n].rules))}
+        assert matched == every, sorted(every - matched)
+    finally:
+        union.unpersist()

@@ -165,6 +165,28 @@ def test_encode_commands_batch_matches_per_feature():
         assert got[i] == want, (i, gt)
 
 
+def test_encode_commands_batch_point_free_batch():
+    """A batch with no points at all whose only feature is a polygon
+    declaring a 4-point ring: the ring truncates to nothing, so the
+    feature emits empty command bytes, as the scalar encoder does
+    (the batch encoder used to index the empty point array)."""
+    from osmzen_spark.sinks.mvt import (
+        _commands_path,
+        _encode_commands_batch,
+        encode_varints,
+    )
+
+    got = _encode_commands_batch(
+        np.array([], dtype=np.int64),
+        np.array([], dtype=np.int64),
+        np.array([0, 0], dtype=np.int64),
+        np.array([3], dtype=np.int8),
+        [np.array([4], dtype=np.int64)],
+    )
+    want = encode_varints(np.array(_commands_path([[]], close=True), dtype=np.uint64))
+    assert got == [want] == [b""]
+
+
 def test_spark_mvt_sink_byte_parity_with_scalar(spark):
     """The vectorized mapInPandas sink must produce byte-identical
     blobs to the scalar reference (old per-point projection + interned

@@ -7,8 +7,9 @@ probe feature, proving each of the ~556 predicates is satisfiable and
 its emit/min_zoom expressions evaluate on a matching row.
 
 Runs entirely on the Arrow path (pyarrow RecordBatch + numpy, no
-SparkSession): the A/B parity suite (test_arrow_parity.py) already ties
-the Arrow path to the Column path on shared layers."""
+SparkSession): the parity suite (test_arrow_parity.py) feeds the same
+generated probes through the production evaluator and the Column-path
+oracle."""
 
 from __future__ import annotations
 
@@ -198,6 +199,24 @@ def _batch(rows: list[dict]) -> BatchContext:
     return BatchContext(batch, keys, zoom=20)
 
 
+def generated_probes(layer_name: str) -> tuple[list[tuple[int, dict]], list[int]]:
+    """Per rule of the layer, the first constraint-walker probe its
+    predicate accepts: ([(rule index, probe)], [unreached rule indices]).
+    A probe is {tags, geom_type, area, length}."""
+    layer = _CONFIG.layers[layer_name]
+    plan = _PLANS[layer_name]
+    probes, unreached = [], []
+    for i, rule in enumerate(layer.rules):
+        for c in itertools.islice(_branches(rule.when, Constraints()), 40):
+            probe = _materialize(c, layer.geometry_types)
+            if bool(plan.preds[i](_batch([probe]))[0]):
+                probes.append((i, probe))
+                break
+        else:
+            unreached.append(i)
+    return probes, unreached
+
+
 GENERIC_PROBES = [
     {"tags": {"name": "probe"}, "geom_type": "Point", "area": 0.0, "length": 0.0},
     {
@@ -235,20 +254,9 @@ def test_every_rule_reachable_by_generated_probe(layer_name):
     are satisfiable (a port typo that makes a rule dead fails here)."""
     layer = _CONFIG.layers[layer_name]
     plan = _PLANS[layer_name]
-    unreached = []
-    for i, rule in enumerate(layer.rules):
-        found = None
-        cands = itertools.islice(_branches(rule.when, Constraints()), 40)
-        for c in cands:
-            probe = _materialize(c, layer.geometry_types)
-            b = _batch([probe])
-            if bool(plan.preds[i](b)[0]):
-                found = (probe, b)
-                break
-        if found is None:
-            unreached.append(i)
-            continue
-        probe, b = found
+    probes, unreached = generated_probes(layer_name)
+    for i, probe in probes:
+        b = _batch([probe])
         mzi = plan.mz_of_rule[i]
         if mzi >= 0:
             plan.mz_fns[mzi](b)
