@@ -12,23 +12,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from osmzen_spark.stagecut import free_local_checkpoint
+
 # large Mersenne prime for universal hashing
 _MERSENNE = (1 << 61) - 1
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Unpersist the internal RDD behind a localCheckpoint'ed frame.
-
-    `df.rdd.unpersist()` is a no-op here: the Python-facing RDD is a
-    derived MapPartitionsRDD, not the persisted InternalRow RDD that
-    localCheckpoint pinned in the block manager. The LogicalRDD node of
-    the checkpointed frame's plan holds the real one (verified: block
-    count drops to zero). Best-effort — a failure just means the block
-    lives until the session ends, which is the pre-fix behavior."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def _shingles(text: Column, k: int = 5) -> Column:
@@ -462,7 +449,7 @@ def dedup_components(
         .distinct()
         .localCheckpoint(eager=True)  # scanned every iteration
     )
-    _free_local_checkpoint(p)
+    free_local_checkpoint(p)
     labels = edges.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label")
     ).localCheckpoint(eager=True)
@@ -496,12 +483,12 @@ def dedup_components(
             .localCheckpoint(eager=True)
         )
         changed = new_labels.filter(F.col("label") != F.col("__old")).count()
-        _free_local_checkpoint(labels)  # previous round no longer referenced
+        free_local_checkpoint(labels)  # previous round no longer referenced
         labels = new_labels
         if changed == 0:
             converged = True
             break
     if not converged:
         raise RuntimeError(f"dedup_components did not converge in {max_iter} iterations")
-    _free_local_checkpoint(edges)
+    free_local_checkpoint(edges)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("rep_id"))

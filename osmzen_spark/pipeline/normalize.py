@@ -27,6 +27,7 @@ from osmzen_spark.compiler.loader import CompiledConfig, load_config
 from osmzen_spark.geom.derive import with_geometry_stats
 from osmzen_spark.pipeline.postprocess import POSTPROCESSORS, set_conditional_names
 from osmzen_spark.pipeline.transforms import apply_transforms
+from osmzen_spark.stagecut import free_local_checkpoint, local_cut
 from osmzen_spark.tiling.cells import with_tile
 
 
@@ -36,6 +37,8 @@ class NormalizeEngine:
         self._ckpt_dir: str | None = None
         self._ckpt_dir_owned = False
         self._ckpt_seq = 0
+        # checkpoint handles, not the coalesced views consumers read:
+        # release() unpersists through the handle's own plan
         self._local_ckpts: list[DataFrame] = []
 
     def release(self) -> None:
@@ -46,14 +49,8 @@ class NormalizeEngine:
         re-run needs them, a finished batch does not). parquet mode:
         delete engine-created temp checkpoint dirs (an explicit
         OSMZEN_CHECKPOINT_DIR is the caller's to manage). Idempotent."""
-        for df in self._local_ckpts:
-            try:
-                # the checkpointed blocks belong to the LogicalRDD the
-                # localCheckpoint produced, not to DataFrame.rdd (which
-                # derives a fresh python-row RDD)
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass
+        for handle in self._local_ckpts:
+            free_local_checkpoint(handle)
         self._local_ckpts.clear()
         if self._ckpt_dir_owned and self._ckpt_dir is not None:
             import shutil
@@ -69,9 +66,10 @@ class NormalizeEngine:
         relation_members: DataFrame | None = None,
         way_nodes: DataFrame | None = None,
     ) -> DataFrame:
-        """Stage 1: geometry-derived columns (area/length/clon/clat),
-        plus membership-join columns when the membership tables are
-        supplied (pipeline.membership)."""
+        """Geometry-derived columns (area/length/clon/clat), plus
+        membership-join columns when the membership tables are supplied
+        (pipeline.membership), as a frame of its own. ``process`` does
+        not call this: it fuses the same derive into the eval pass."""
         out = with_geometry_stats(elements)
         if relation_members is not None or way_nodes is not None:
             from osmzen_spark.pipeline.membership import with_membership_columns
@@ -89,18 +87,26 @@ class NormalizeEngine:
     ) -> DataFrame:
         """Materialize a stage boundary and truncate the plan.
 
-        Two modes (env OSMZEN_STAGE_CHECKPOINT):
+        Three modes (env OSMZEN_STAGE_CHECKPOINT):
 
-        * ``local``: DataFrame.localCheckpoint — blocks live
-          in executor memory (spill to disk). Lowest latency for small
-          frames, but at full-pipeline scale every cached stage
-          competes for the single local-mode heap, and GC pressure
-          makes byte-heavy downstream phases ANTI-scale with core
-          count (measured: post-process execute 174 s at local[32] vs
-          55 s at local[8], sf0.1 x4; and at plain sf0.1 the 9-layer
-          flagship ran 94.7 s with local vs 35.1 s with parquet,
-          interleaved same-session trials — the 1M heap-held wide rows
-          put the JVM into GC collapse during the 13-scan post-process
+        * ``local``: an in-memory localCheckpoint (blocks spill to
+          disk), owned by this engine and freed by ``release``. An
+          eager cut goes through ``local_cut``: the job that
+          materializes it also counts its rows, and the view
+          downstream reads is coalesced to one partition per Arrow
+          batch, so a small frame feeds its Python stages one task,
+          not one per upstream partition (each Python task pays a
+          fixed ~0.15 s of worker setup, see ``stagecut``). A lazy cut
+          (``eager=False``) keeps its partitions: sizing needs the
+          count. Lowest latency for small frames, but at
+          full-pipeline scale every cached stage competes for the
+          single local-mode heap, and GC pressure makes byte-heavy
+          downstream phases ANTI-scale with core count (measured:
+          post-process execute 174 s at local[32] vs 55 s at
+          local[8], sf0.1 x4; and at plain sf0.1 the 9-layer flagship
+          ran 94.7 s with local vs 35.1 s with parquet, interleaved
+          same-session trials — the 1M heap-held wide rows put the
+          JVM into GC collapse during the 13-scan post-process
           phase).
         With no env override, ``process`` picks the default per run:
         ``parquet`` for full-config (>=5 layer) runs, ``local`` for
@@ -190,9 +196,19 @@ class NormalizeEngine:
                 writer = writer.partitionBy(partition_by)
             writer.parquet(path)
             return df.sparkSession.read.parquet(path)
-        out = df.localCheckpoint(eager=eager)
+        if eager:
+            return self.local_cut(df)
+        out = df.localCheckpoint(eager=False)
         self._local_ckpts.append(out)
         return out
+
+    def local_cut(self, df: DataFrame) -> DataFrame:
+        """Eager local stage cut sized by rows (``stagecut.local_cut``),
+        owned by this engine: ``release`` frees it. Returns the view
+        consumers read."""
+        view, handle, _rows = local_cut(df)
+        self._local_ckpts.append(handle)
+        return view
 
     @staticmethod
     def _point_in_bound(bound, lon_col: str = "clon", lat_col: str = "clat"):
@@ -243,6 +259,10 @@ class NormalizeEngine:
         one-layer call is the same pass with one name. With
         ``cache=True`` that union is the single stage cut, and the
         per-layer frames are filter + projection views over it.
+        Runs with and without a ``bound`` share this shape: the
+        geometry derive is always fused into the eval pass, and a
+        bound drops out-of-bound Points from the union (by the derived
+        clon/clat) before the cut.
 
         (Stage-checkpoint mode note: full-config runs default to
         ``parquet`` checkpoints — see ``_stage_cut``; measured 2.7x
@@ -262,43 +282,40 @@ class NormalizeEngine:
         # eval mapInArrow pass (derive_geometry=True) so the wide
         # elements table crosses the Python boundary ONCE, not twice.
         # The membership joins only key on element_type/element_id, so
-        # they run on the raw elements unchanged. A bound filter needs
-        # clon/clat before eval, so bounded runs keep the separate
-        # derive pass.
-        fuse = bound is None
+        # they run on the raw elements unchanged.
         ckpt_mode = "parquet" if len(names) >= 5 else "local"
-        membership = relation_members is not None or way_nodes is not None
-        if fuse:
-            derived = elements
-            if membership:
-                from osmzen_spark.pipeline.membership import with_membership_columns
+        derived = elements
+        if relation_members is not None or way_nodes is not None:
+            from osmzen_spark.pipeline.membership import with_membership_columns
 
-                derived = with_membership_columns(elements, relation_members, way_nodes)
-        else:
-            derived = self.derive(elements, relation_members, way_nodes)
-        if membership and not cache:
-            # cut the plan at the membership join: without this the
-            # join+aggregation subtree is duplicated into every layer
-            # view (and every postprocess self-join on top), and
-            # Catalyst analysis cost multiplies accordingly. On a
-            # cluster this cut is the Iceberg stage checkpoint
-            # (lineage.py). When the eval union is itself cut
-            # (cache=True), `derived` has exactly one consumer — the
-            # eval pass feeding that cut — so this intermediate
-            # checkpoint would be a pure extra write+read of the full
-            # elements table and is skipped.
-            derived = self._stage_cut(derived, "derived", eager=False, default_mode=ckpt_mode)
-        if bound is not None:
-            derived = derived.filter(
-                (F.col("geom_type") != "Point") | self._point_in_bound(bound)
-            )
+            derived = with_membership_columns(elements, relation_members, way_nodes)
+            if not cache:
+                # cut the plan at the membership join: without this the
+                # join+aggregation subtree is duplicated into every
+                # layer view (and every postprocess self-join on top),
+                # and Catalyst analysis cost multiplies accordingly. On
+                # a cluster this cut is the Iceberg stage checkpoint
+                # (lineage.py). When the eval union is itself cut
+                # (cache=True), `derived` has exactly one consumer —
+                # the eval pass feeding that cut — so this
+                # intermediate checkpoint would be a pure extra
+                # write+read of the full elements table and is skipped.
+                derived = self._stage_cut(
+                    derived, "derived", eager=False, default_mode=ckpt_mode
+                )
         use = {n: self.config.layers[n] for n in names}
-        union = evaluate_all_layers_arrow(derived, use, zoom, names, derive_geometry=fuse)
+        union = evaluate_all_layers_arrow(derived, use, zoom, names, derive_geometry=True)
+        if bound is not None:
+            # bounded (per-tile) runs: Points outside the bound go. The
+            # filter reads the clon/clat the eval pass derived; every
+            # row is evaluated on its own, so filtering the union keeps
+            # exactly the rows that filtering the input would
+            union = union.filter((F.col("geom_type") != "Point") | self._point_in_bound(bound))
         if cache:
             union = self._stage_cut(
                 union, "eval_union", eager=True, default_mode=ckpt_mode, partition_by="zen_layer"
             )
-        input_cols = derived.columns + (["area", "length", "clon", "clat"] if fuse else [])
+        input_cols = derived.columns + ["area", "length", "clon", "clat"]
         views = split_layer_views(union, use, input_cols)
         layers = {}
         for n in names:

@@ -397,9 +397,15 @@ def mvt_tiles(
     geom_type, zen_layer, id, tile_x, tile_y at ``zoom``, plus
     ``property_cols``. Returns (tile_x, tile_y, n_features, mvt).
     Byte-parity with the scalar encode_tile path is pytest-gated
-    (tests/test_mvt.py)."""
+    (tests/test_mvt.py).
+
+    The projected input is stage-cut and counted when this is called
+    (one Spark job), so the exchange width fits the row count; see the
+    width note at the end of the body."""
     import numpy as np
     import pandas as pd
+
+    from osmzen_spark.stagecut import arrow_batches, local_cut
 
     n_tiles = 1 << zoom
     max_lat = 85.05112877980659
@@ -541,19 +547,26 @@ def mvt_tiles(
                 yield pd.DataFrame(rows, columns=out_cols)
 
     cols = ["tile_x", "tile_y", "geometry", "geom_type", "zen_layer", "id", *property_cols]
-    # Explicit partition count: a bare repartition(cols) exchange is
+    # Exchange width sized by rows. A bare repartition(cols) exchange is
     # AQE-coalescible, and the encoder's input is few BYTES relative to
     # its CPU cost (quantization + varint assembly per feature), so AQE
     # folded the whole encode onto 1-2 cores (measured: the sf0.1
-    # encode of 200k features ran ~7 s nearly single-core). Pinning the
-    # count to the session's shuffle parallelism keeps the Python stage
-    # wide; the value is config-derived (the submitter sizes
-    # spark.sql.shuffle.partitions to the cluster), not a local
-    # constant.
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # encode of 200k features ran ~7 s nearly single-core): a wide
+    # input keeps the session's shuffle parallelism (config-derived:
+    # the submitter sizes spark.sql.shuffle.partitions to the
+    # cluster). A narrow one gets one partition per Arrow batch of
+    # rows, counted in the job that cuts the projected input: every
+    # encoder task is a Python task with a fixed setup cost, and a
+    # one-tile request would otherwise start shuffle.partitions of
+    # them with all but one empty. The cut's blocks are freed by
+    # Spark's ContextCleaner once the returned frame is unreachable.
+    spark = df.sparkSession
+    enc_in, _handle, rows = local_cut(df.select(*dict.fromkeys(cols)))
+    n_parts = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), arrow_batches(spark, rows)
+    )
     return (
-        df.select(*dict.fromkeys(cols))
-        .repartition(n_parts, "tile_x", "tile_y")
+        enc_in.repartition(n_parts, "tile_x", "tile_y")
         .sortWithinPartitions("tile_x", "tile_y", "zen_layer", "id")
         .mapInPandas(gen, "tile_x long, tile_y long, n_features int, mvt binary")
     )

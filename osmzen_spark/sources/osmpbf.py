@@ -36,6 +36,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from osmzen_spark.sources.osmxml import OsmTables, raw_tables
+from osmzen_spark.stagecut import local_cut
 
 # ------------------------------------------------------------------
 # vectorized varint / zigzag kernels
@@ -388,10 +389,11 @@ def parse_osm_pbf(spark: SparkSession, path: str) -> DataFrame:
 
 def read_osm_pbf(spark: SparkSession, path: str, stage_cut: bool = True) -> OsmTables:
     """Parse a .osm.pbf into the five raw tables (same bundle as the
-    XML source; everything downstream is shared)."""
+    XML source; everything downstream is shared). The parse is stage-cut
+    as in ``read_osm_xml``."""
     parsed = parse_osm_pbf(spark, path)
     if stage_cut:
-        parsed = parsed.localCheckpoint(eager=True)
+        parsed = local_cut(parsed)[0]
     return raw_tables(parsed)
 
 
@@ -407,12 +409,14 @@ def full_tile(
     of sources.osmxml.full_tile (the reference's `Config.Process` end
     to end, ref:process.go:22, fed by the planet-scale input format).
     Blob-parallel decode, then the shared assembly/membership/rule
-    pipeline (process_tables)."""
+    pipeline (process_tables). As for the XML twin, every stage cut of
+    the call belongs to ``engine``: ``engine.release()`` frees them."""
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
     from osmzen_spark.sources.osmxml import process_tables
 
-    return process_tables(
-        read_osm_pbf(spark, path), zoom=zoom, bound=bound, engine=engine, **process_kw
-    )
+    eng = engine or NormalizeEngine()
+    t = raw_tables(eng.local_cut(parse_osm_pbf(spark, path)))
+    return process_tables(t, zoom=zoom, bound=bound, engine=eng, **process_kw)
 
 
 # ------------------------------------------------------------------

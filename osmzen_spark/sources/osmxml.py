@@ -31,6 +31,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osmzen_spark.stagecut import local_cut
+
 # one row per OSM element; parallel columns nds/members are NULL for
 # the types that lack them
 _PARSED_SCHEMA = (
@@ -177,10 +179,12 @@ def read_osm_xml(spark: SparkSession, path: str, stage_cut: bool = True) -> OsmT
     stage_cut=True materializes the single parse before the five
     derived tables fan out from it (otherwise each consumer would
     re-decode the XML — the same fan-out rule the engine applies at
-    every multi-consumer boundary, BASELINE.md round-1 lesson 3)."""
+    every multi-consumer boundary, BASELINE.md round-1 lesson 3). The
+    cut is sized by rows (``stagecut.local_cut``) and its blocks are
+    the caller's: ``full_tile`` hands them to its engine instead."""
     parsed = parse_osm_xml(spark, path)
     if stage_cut:
-        parsed = parsed.localCheckpoint(eager=True)
+        parsed = local_cut(parsed)[0]
     return raw_tables(parsed)
 
 
@@ -195,13 +199,18 @@ def process_tables(
     (ref:process.go:22: OSM -> GeoJSON conversion -> every layer's
     filter/transform/postprocess at `zoom`, clipped to `bound`):
     returns {layer_name: DataFrame}. Shared by every input format
-    that lands in the `OsmTables` bundle (XML, PBF)."""
+    that lands in the `OsmTables` bundle (XML, PBF). The assembled
+    elements are stage-cut by the engine (``NormalizeEngine.local_cut``),
+    so ``engine.release()`` frees them with the engine's own cuts."""
     from osmzen_spark.pipeline.assembly import assemble_elements
     from osmzen_spark.pipeline.normalize import NormalizeEngine
 
-    elements = assemble_elements(
-        t.nodes, t.way_nodes, t.ways, t.relations, t.relation_members, bound=bound
-    ).localCheckpoint(eager=True)
+    eng = engine or NormalizeEngine()
+    elements = eng.local_cut(
+        assemble_elements(
+            t.nodes, t.way_nodes, t.ways, t.relations, t.relation_members, bound=bound
+        )
+    )
     # membership context (ref:process.go:214-263's relation/way member
     # lookups) wants tags riding along with the member rows
     rel_members = t.relation_members.join(
@@ -211,7 +220,6 @@ def process_tables(
     wn = t.way_nodes.join(
         t.ways.select("way_id", F.col("tags").alias("way_tags")), on="way_id"
     ).select("way_id", "node_id", "way_tags")
-    eng = engine or NormalizeEngine()
     return eng.process(
         elements,
         zoom=zoom,
@@ -234,7 +242,11 @@ def full_tile(
     reference's `Config.Process` end to end, ref:process.go:22).
 
     `bound` is (minlon, minlat, maxlon, maxlat); None processes
-    unclipped (world bound for multipolygon ring patching)."""
-    return process_tables(
-        read_osm_xml(spark, path), zoom=zoom, bound=bound, engine=engine, **process_kw
-    )
+    unclipped (world bound for multipolygon ring patching). Every
+    stage cut of the call, the parse included, belongs to ``engine``
+    (a fresh one when None): ``engine.release()`` frees them all."""
+    from osmzen_spark.pipeline.normalize import NormalizeEngine
+
+    eng = engine or NormalizeEngine()
+    t = raw_tables(eng.local_cut(parse_osm_xml(spark, path)))
+    return process_tables(t, zoom=zoom, bound=bound, engine=eng, **process_kw)

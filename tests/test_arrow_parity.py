@@ -119,3 +119,19 @@ def test_arrow_column_parity(spark):
         assert matched == every, sorted(every - matched)
     finally:
         union.unpersist()
+
+
+def test_rule_payload_cached_across_fresh_layer_dicts(spark):
+    """NormalizeEngine.process hands the evaluator a fresh {name: layer}
+    dict on every call; the compiled plan and its pickled rule payload
+    are keyed on the layer objects, so a second call reuses them."""
+    from osmzen_spark.compiler.arrow_multilayer import _cached_plan
+
+    layers = NormalizeEngine().config.layers
+    names = ["buildings", "pois"]
+    plan_a, payload_a = _cached_plan({n: layers[n] for n in names}, names)
+    plan_b, payload_b = _cached_plan({n: layers[n] for n in names}, names)
+    assert payload_a is payload_b and plan_a is plan_b
+    # a different layer subset is a different plan
+    _plan_c, payload_c = _cached_plan({"pois": layers["pois"]}, ["pois"])
+    assert payload_c is not payload_a
